@@ -3,65 +3,44 @@
 north_rule: "every stage writes per-partition lineage + counters to enable
 checkpoint-resumable restarts".
 
-Design:
-
-* The extraction kernel stamps every row with the executor partition id and
-  per-row counters (n_regions, n_artifacts, n_pages, error). ``lineage_metrics``
-  reduces those to one row per partition -- a cheap shuffle of tiny rows.
-* ``run_resumable`` shards the job into ``n_buckets`` conv-hash buckets
-  (``pmod(xxhash64(conv_id), n_buckets)``) -- a conversation never straddles
-  buckets, so per-bucket (conv_id, turn_idx) ordering gives stable per-conv
-  output. ALL pending buckets are written in ONE ``partitionBy("bucket")``
-  pass by default (one scan of the input per resume cycle -- the per-batch
-  re-filter of an earlier design scanned the full input once per batch).
-  ``bucket_batch`` remains as an opt-in recomputation bound: each batch costs
-  one additional input scan, the documented tradeoff.
-* Per-bucket counters are DERIVED per bucket: after the data write commits,
-  the just-written (partition-pruned, column-pruned) output is aggregated
-  ``groupBy(bucket)`` and each bucket's lineage JSON carries its own
-  counters, not batch-level copies.
-* A bucket's lineage record is committed (atomic create+rename through the
-  Hadoop FileSystem API, so HDFS/S3/cloud output roots work, not just the
-  driver's local disk) only AFTER its data write commits. A restart lists the
-  lineage dir and skips completed buckets: exactly-once per bucket despite
-  crashes between batches.
-
-At 100 TB / 1000 executors the bucket count is the resume granularity knob;
-recomputation after a crash is bounded by one batch (default: the whole
-pending set -- size batches only if crash-recomputation cost matters more
-than scan count).
-
-Documented residual (single-writer assumption): nothing FENCES two drivers
-resuming the same output root concurrently -- a stalled-but-alive driver A
-and a replacement driver B can interleave dynamic-overwrite commits on the
-same bucket dirs, leaving data that does not match the committed lineage.
-A robust fence needs storage-level conditional writes (HDFS lease /
-S3 conditional PUT); a plain lock file cannot distinguish a crashed holder
-from a stalled one without a heartbeat protocol. Run one resuming driver
-per output root (the same rule every dynamic-overwrite pipeline has).
+The extraction kernel stamps every row with the executor partition id and
+per-row counters (n_regions, n_artifacts, n_pages, error);
+``lineage_metrics`` reduces those to one row per partition. ``run_bucketed``
+is the one crash-safe bucket-commit loop: ``run_resumable`` (extraction) and
+``jobs/corpus_job.run_pipeline_resumable`` (curation) only build its input,
+transform and run config. Its docstring states the protocol.
 """
 
 from __future__ import annotations
 
 import json
+import re
 import time
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .extraction import build_extraction
 
 
+def _extraction_counters() -> dict[str, tuple[Column, Any]]:
+    """name -> (aggregate over extracted rows, value when there are none)."""
+    return {
+        "turns": (F.count(F.lit(1)), 0),
+        "regions": (F.sum("n_regions"), 0),
+        "artifacts": (F.sum("n_artifacts"), 0),
+        "pages": (F.sum("n_pages"), 0),
+        "errors": (F.count(F.when(F.col("error").isNotNull(), 1)), 0),
+        "min_conv_id": (F.min("conv_id"), None),
+        "max_conv_id": (F.max("conv_id"), None),
+    }
+
+
 def lineage_metrics(extracted: DataFrame) -> DataFrame:
     """Reduce kernel-stamped rows to one lineage row per executor partition."""
     return extracted.groupBy("part_id").agg(
-        F.count(F.lit(1)).alias("turns"),
-        F.sum("n_regions").alias("regions"),
-        F.sum("n_artifacts").alias("artifacts"),
-        F.sum("n_pages").alias("pages"),
-        F.count(F.when(F.col("error").isNotNull(), 1)).alias("errors"),
-        F.min("conv_id").alias("min_conv_id"),
-        F.max("conv_id").alias("max_conv_id"),
+        *(agg.alias(k) for k, (agg, _) in _extraction_counters().items())
     )
 
 
@@ -77,10 +56,8 @@ def bucket_expr(n_buckets: int):
 
 
 def _fs_and_path(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath, jvm
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 def _lineage_dir(output_root: str) -> str:
@@ -88,7 +65,7 @@ def _lineage_dir(output_root: str) -> str:
 
 
 #: a real lineage record is always bucket_<int>.json by construction
-_BUCKET_FILE_RE = __import__("re").compile(r"^bucket_(\d+)\.json$")
+_BUCKET_FILE_RE = re.compile(r"^bucket_(\d+)\.json$")
 
 
 def _active_spark() -> SparkSession:
@@ -98,65 +75,65 @@ def _active_spark() -> SparkSession:
     return spark
 
 
-def completed_buckets(output_root: str, spark: SparkSession | None = None) -> set[int]:
-    spark = spark or _active_spark()
-    fs, d, _jvm = _fs_and_path(spark, _lineage_dir(output_root))
+def _read_json(spark: SparkSession, path: str) -> Any:
+    """The JSON document at ``path``, or None when no file is there."""
+    fs, hpath = _fs_and_path(spark, path)
+    if not fs.exists(hpath):
+        return None
+    stream = fs.open(hpath)
+    try:
+        data = bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+    finally:
+        stream.close()
+    return json.loads(data.decode("utf-8"))
+
+
+def _write_json_atomic(spark: SparkSession, path: str, obj: Any) -> None:
+    """Commit ``obj`` to ``path`` all at once: write a hidden sibling, then
+    rename it over ``path``, so a crash never leaves a torn record."""
+    fs, final = _fs_and_path(spark, path)
+    parent = final.getParent()
+    fs.mkdirs(parent)
+    tmp = spark._jvm.org.apache.hadoop.fs.Path(parent, f".{final.getName()}.tmp")
+    stream = fs.create(tmp, True)
+    try:
+        stream.write(bytearray(json.dumps(obj, sort_keys=True).encode("utf-8")))
+    finally:
+        stream.close()
+    if fs.exists(final):
+        fs.delete(final, False)
+    # Hadoop FileSystem.rename reports failure by RETURNING false, not by
+    # raising; ignoring it would leave a bucket uncommitted while the run
+    # proceeds -- unbounded re-extraction on every future resume
+    if not fs.rename(tmp, final):
+        raise IOError(f"lineage commit rename failed: {tmp} -> {final}")
+
+
+def _bucket_files(spark: SparkSession, output_root: str):
+    """(bucket, path) of every committed lineage record."""
+    fs, d = _fs_and_path(spark, _lineage_dir(output_root))
     if not fs.exists(d):
-        return set()
-    out: set[int] = set()
+        return []
+    out = []
     for status in fs.listStatus(d):
         # strict match: debris like 'bucket_3 (1).json' (editor save-as,
         # object-store copy tools) must be IGNORED, not crash int() and
         # brick every subsequent resume
         m = _BUCKET_FILE_RE.match(status.getPath().getName())
         if m:
-            out.add(int(m.group(1)))
+            out.append((int(m.group(1)), status.getPath().toString()))
     return out
+
+
+def completed_buckets(output_root: str, spark: SparkSession | None = None) -> set[int]:
+    return {b for b, _ in _bucket_files(spark or _active_spark(), output_root)}
 
 
 def read_lineage(output_root: str, spark: SparkSession | None = None) -> dict[int, dict]:
-    """All committed per-bucket lineage records."""
+    """All committed per-bucket lineage records,
+    each ``{"bucket", "counters", "committed_at"}``."""
     spark = spark or _active_spark()
-    fs, d, jvm = _fs_and_path(spark, _lineage_dir(output_root))
-    out: dict[int, dict] = {}
-    if not fs.exists(d):
-        return out
-    for status in fs.listStatus(d):
-        name = status.getPath().getName()
-        if _BUCKET_FILE_RE.match(name):
-            stream = fs.open(status.getPath())
-            try:
-                data = bytes(
-                    jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-                ).decode("utf-8")
-            finally:
-                stream.close()
-            rec = json.loads(data)
-            out[int(rec["bucket"])] = rec
-    return out
-
-
-def _commit_lineage(
-    output_root: str, bucket: int, record: dict, spark: SparkSession | None = None
-) -> None:
-    spark = spark or _active_spark()
-    d = _lineage_dir(output_root)
-    fs, dpath, jvm = _fs_and_path(spark, d)
-    fs.mkdirs(dpath)
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{d}/.bucket_{bucket}.json.tmp")
-    final = jvm.org.apache.hadoop.fs.Path(f"{d}/bucket_{bucket}.json")
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray(json.dumps(record).encode("utf-8")))
-    finally:
-        stream.close()
-    if fs.exists(final):
-        fs.delete(final, False)
-    # Hadoop FileSystem.rename reports failure by RETURNING false, not by
-    # raising; ignoring it would leave the bucket uncommitted while the run
-    # proceeds -- unbounded re-extraction on every future resume
-    if not fs.rename(tmp, final):
-        raise IOError(f"lineage commit rename failed: {tmp} -> {final}")
+    return {b: _read_json(spark, p) for b, p in _bucket_files(spark, output_root)}
 
 
 def ensure_run_config(
@@ -181,19 +158,9 @@ def ensure_run_config(
     mismatch (caught live driving extract_job --resumable)."""
     config = json.loads(json.dumps(config, sort_keys=True))
     spark = spark or _active_spark()
-    d = _lineage_dir(output_root)
-    fs, dpath, jvm = _fs_and_path(spark, d)
-    final = jvm.org.apache.hadoop.fs.Path(f"{d}/run_config.json")
-    if fs.exists(final):
-        stream = fs.open(final)
-        try:
-            stored = json.loads(
-                bytes(
-                    jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-                ).decode("utf-8")
-            )
-        finally:
-            stream.close()
+    path = _lineage_dir(output_root) + "/run_config.json"
+    stored = _read_json(spark, path)
+    if stored is not None:
         if stored != config:
             raise ValueError(
                 "resume configuration mismatch: this output was started "
@@ -217,21 +184,10 @@ def ensure_run_config(
             "run-config pinning, or the pin was deleted); resuming cannot "
             "verify the bucket keying. Either restart with a fresh output "
             "path, or -- if the original parameters are known -- write "
-            f"them to {d}/run_config.json "
+            f"them to {path} "
             f"(this invocation would have pinned {config!r})"
         )
-    fs.mkdirs(dpath)
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{d}/.run_config.json.tmp")
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray(json.dumps(config, sort_keys=True).encode("utf-8")))
-    finally:
-        stream.close()
-    if not fs.rename(tmp, final):
-        raise IOError(f"run-config commit rename failed: {tmp} -> {final}")
-
-
-_COUNTER_COLS = ("turns", "regions", "artifacts", "pages", "errors")
+    _write_json_atomic(spark, path, config)
 
 
 def _delete_bucket_dirs(
@@ -239,10 +195,10 @@ def _delete_bucket_dirs(
 ) -> None:
     """Remove the Hive partition dirs of PENDING buckets before their batch
     rewrite (see the call site). No-op for dirs that do not exist."""
-    fs, root, jvm = _fs_and_path(spark, data_root)
+    fs, _ = _fs_and_path(spark, data_root)
     for b in buckets:
         fs.delete(
-            jvm.org.apache.hadoop.fs.Path(
+            spark._jvm.org.apache.hadoop.fs.Path(
                 data_root.rstrip("/") + f"/bucket={int(b)}"
             ),
             True,
@@ -250,42 +206,142 @@ def _delete_bucket_dirs(
 
 
 def _per_bucket_counters(
-    spark: SparkSession, data_root: str, buckets: list[int], is_table: bool = False
+    spark: SparkSession, written: str, buckets: list[int],
+    counters: dict[str, tuple[Column, Any]], is_table: bool,
 ) -> dict[int, dict]:
     """Aggregate the just-written output per bucket (partition-pruned read of
-    tiny columns -- NOT a kernel re-execution). When every row of the batch
-    was dropped upstream the data root may not exist at all (dynamic
-    overwrite writes no dirs): that ONE case returns {} so the zero-row
-    lineage records still commit and resume skips -- any OTHER read failure
-    (transient storage error) propagates, because committing rows=0 over
-    intact data would corrupt the lineage metadata permanently."""
+    tiny columns -- NOT a re-execution of the transform). When every row of
+    the batch was dropped upstream the data root may not exist at all
+    (dynamic overwrite writes no dirs): that ONE case returns {} so the
+    zero-row lineage records still commit and resume skips -- any OTHER read
+    failure (transient storage error) propagates, because committing rows=0
+    over intact data would corrupt the lineage metadata permanently."""
     from pyspark.errors import AnalysisException
 
     try:
-        src = (spark.read.table(data_root) if is_table
-               else spark.read.parquet(data_root))
+        src = spark.read.table(written) if is_table else spark.read.parquet(written)
     except AnalysisException:
         return {}
-    df = (
-        src
-        .where(F.col("bucket").isin([int(b) for b in buckets]))
+    rows = (
+        src.where(F.col("bucket").isin(buckets))
         .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("turns"),
-            F.sum("n_regions").alias("regions"),
-            F.sum("n_artifacts").alias("artifacts"),
-            F.sum("n_pages").alias("pages"),
-            F.count(F.when(F.col("error").isNotNull(), 1)).alias("errors"),
-            F.min("conv_id").alias("min_conv_id"),
-            F.max("conv_id").alias("max_conv_id"),
-        )
+        .agg(*(agg.alias(k) for k, (agg, _) in counters.items()))
+        .collect()
     )
-    out: dict[int, dict] = {}
-    for r in df.collect():
-        d = r.asDict()
-        b = int(d.pop("bucket"))
-        out[b] = {k: (int(v) if isinstance(v, int) else v) for k, v in d.items()}
-    return out
+    return {int(r["bucket"]): {k: r[k] for k in counters} for r in rows}
+
+
+def run_bucketed(
+    spark: SparkSession,
+    bucketed: DataFrame,
+    output_root: str,
+    run_config: dict,
+    *,
+    n_buckets: int,
+    bucket_batch: int | None,
+    transform: Callable[[DataFrame], DataFrame],
+    order: tuple[str, ...],
+    counters: dict[str, tuple[Column, Any]],
+    iceberg_table: str | None = None,
+    fail_after_batches: int | None = None,
+) -> tuple[dict, dict[int, dict]]:
+    """The crash-safe bucket-commit loop behind every resumable run.
+
+    ``bucketed`` carries an int ``bucket`` column in ``[0, n_buckets)``;
+    ``transform`` maps a bucket-filtered slice of it to output rows that
+    keep ``bucket``. Output lands under ``<output_root>/data`` partitioned by
+    bucket (or in ``iceberg_table``), lineage under ``<output_root>/_lineage``.
+    Returns ``({"resumed_buckets", "ran_buckets", "input_scans"}, {bucket:
+    counters})`` for the buckets this call wrote.
+
+    Protocol:
+
+    * ``ensure_run_config`` pins ``run_config`` -- everything a bucket
+      index's meaning depends on -- before ``completed_buckets`` is read.
+    * Pending buckets are written ``bucket_batch`` at a time; None puts ALL
+      of them in one ``partitionBy("bucket")`` pass, exactly ONE input scan
+      per resume cycle. A batch size bounds crash recomputation at the cost
+      of one input scan per batch.
+    * Each batch is hash-partitioned on ``(bucket, order[0])`` and sorted by
+      ``(bucket, *order)`` -- NOT one partition per bucket (that would
+      serialize a 1.5 TB bucket's sort at 100 TB / 64 buckets) and NOT
+      repartitionByRange (its boundary sampling re-executes the transform).
+      Every ``order[0]`` group (a conversation, a document) lands whole in
+      one task, and per-bucket files come out in a stable order.
+    * Parquet: the batch's pending partition dirs are deleted first, then
+      written with dynamic partition overwrite. Dynamic overwrite only
+      replaces partitions it writes rows to, so a crashed attempt's rows
+      would otherwise survive a re-run that now yields ZERO rows for that
+      bucket (committed lineage over stale data). Deleting pending dirs is
+      safe: their lineage never committed. Iceberg: one atomic
+      ``overwritePartitions()`` snapshot per batch
+      (``sinks.overwrite_buckets_iceberg``).
+    * After the write, ``counters`` (name -> (aggregate, value for an empty
+      bucket)) are aggregated per bucket from the WRITTEN data -- a retried
+      task cannot double-count them, unlike ``observe()``.
+    * Only then is each bucket's record ``{"bucket", "counters",
+      "committed_at"}`` committed (atomic create+rename). A restart skips
+      committed buckets: exactly-once per bucket despite crashes between
+      batches.
+
+    ``fail_after_batches`` is a test hook: raise after N batches to simulate
+    a crash; the next call resumes from the lineage records.
+
+    Residual (single-writer assumption): nothing FENCES two drivers resuming
+    the same output root concurrently -- a stalled-but-alive driver A and a
+    replacement driver B can interleave dynamic-overwrite commits on the
+    same bucket dirs, leaving data that does not match the committed
+    lineage. A robust fence needs storage-level conditional writes (HDFS
+    lease / S3 conditional PUT); a plain lock file cannot distinguish a
+    crashed holder from a stalled one without a heartbeat protocol. Run one
+    resuming driver per output root.
+    """
+    ensure_run_config(output_root, run_config, spark)
+    done = completed_buckets(output_root, spark)
+    pending = [b for b in range(n_buckets) if b not in done]
+    data_root = output_root.rstrip("/") + "/data"
+    step = bucket_batch or max(1, len(pending))
+    empty = {k: zero for k, (_, zero) in counters.items()}
+    summary = {"resumed_buckets": len(done), "ran_buckets": 0, "input_scans": 0}
+    ran: dict[int, dict] = {}
+
+    for n_done, first in enumerate(range(0, len(pending), step)):
+        if fail_after_batches is not None and n_done >= fail_after_batches:
+            raise RuntimeError(f"injected failure after {n_done} batches")
+        batch = pending[first:first + step]
+        src = bucketed
+        if len(batch) < n_buckets:
+            src = src.filter(F.col("bucket").isin(batch))
+        n_write = max(len(batch), spark.sparkContext.defaultParallelism)
+        out = transform(src).repartition(
+            n_write, "bucket", order[0]
+        ).sortWithinPartitions("bucket", *order)
+        if iceberg_table is not None:
+            from .sinks import overwrite_buckets_iceberg
+
+            overwrite_buckets_iceberg(out, iceberg_table, batch)
+        else:
+            _delete_bucket_dirs(spark, data_root, batch)
+            (
+                out.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bucket")
+                .parquet(data_root)
+            )
+        summary["input_scans"] += 1
+        stamp = time.time()
+        got = _per_bucket_counters(
+            spark, iceberg_table or data_root, batch, counters,
+            is_table=iceberg_table is not None,
+        )
+        for b in batch:
+            ran[b] = got.get(b, empty)
+            _write_json_atomic(
+                spark, f"{_lineage_dir(output_root)}/bucket_{b}.json",
+                {"bucket": b, "counters": ran[b], "committed_at": stamp},
+            )
+        summary["ran_buckets"] += len(batch)
+    return summary, ran
 
 
 def run_resumable(
@@ -300,12 +356,15 @@ def run_resumable(
     detector_kind: str = "stub",
     detector_kw: dict | None = None,
 ) -> dict:
-    """Checkpoint-resumable extraction run. Returns a summary dict.
+    """Checkpoint-resumable extraction run (``run_bucketed`` over
+    ``pmod(xxhash64(conv_id), n_buckets)`` buckets -- a conversation never
+    straddles buckets, so per-bucket (conv_id, turn_idx) order gives stable
+    per-conv output). Returns a summary dict; ``turns``/``errors`` sum the
+    per-bucket counters of the buckets this call wrote.
 
-    bucket_batch=None (default) writes every pending bucket in one
-    partitionBy("bucket") pass: exactly ONE scan of the input per resume
-    cycle (summary["input_scans"] reports it). Setting bucket_batch bounds
-    crash recomputation to a batch at the cost of one input scan per batch.
+    bucket_batch=None (default) writes every pending bucket in one pass:
+    exactly ONE scan of the input per resume cycle (summary["input_scans"]
+    reports it).
 
     iceberg_table: when set (and the Iceberg runtime is on the classpath),
     bucket data commits through ``overwritePartitions()`` -- one ATOMIC
@@ -316,11 +375,15 @@ def run_resumable(
     fail_after_batches: test hook -- raise after N batches to simulate a
     crash; a subsequent call resumes from the lineage records.
     """
-    df = spark.read.parquet(input_path)
-    # a bucket index only means something under the parameters that
-    # produced it -- refuse to resume under different ones (stale
-    # partitions + wrongly-skipped buckets otherwise, silently)
-    ensure_run_config(
+    def transform(part: DataFrame) -> DataFrame:
+        return build_extraction(
+            part.drop("bucket"), thresholds=thresholds, order_output=False,
+            detector_kind=detector_kind, detector_kw=detector_kw,
+        ).withColumn("bucket", bucket_expr(n_buckets))
+
+    summary, ran = run_bucketed(
+        spark,
+        spark.read.parquet(input_path).withColumn("bucket", bucket_expr(n_buckets)),
         output_root,
         {
             "kind": "extraction",
@@ -340,84 +403,14 @@ def run_resumable(
                 sorted((detector_kw or {}).items()),
             ),
         },
-        spark,
+        n_buckets=n_buckets,
+        bucket_batch=bucket_batch,
+        transform=transform,
+        order=("conv_id", "turn_idx"),
+        counters=_extraction_counters(),
+        iceberg_table=iceberg_table,
+        fail_after_batches=fail_after_batches,
     )
-    done = completed_buckets(output_root, spark)
-    pending = [b for b in range(n_buckets) if b not in done]
-    data_root = output_root.rstrip("/") + "/data"
-
-    step = bucket_batch or max(1, len(pending))
-    batches = [pending[i:i + step] for i in range(0, len(pending), step)]
-    n_done = 0
-    summary = {
-        "resumed_buckets": len(done), "ran_buckets": 0, "turns": 0,
-        "errors": 0, "input_scans": 0,
-    }
-
-    for batch in batches:
-        if fail_after_batches is not None and n_done >= fail_after_batches:
-            raise RuntimeError(f"injected failure after {n_done} batches")
-        obs = Observation(f"batch-{batch[0]}-{time.monotonic_ns()}")
-        part = df.withColumn("bucket", bucket_expr(n_buckets))
-        if len(batch) < n_buckets:
-            part = part.filter(F.col("bucket").isin([int(b) for b in batch]))
-        out = build_extraction(
-            part.drop("bucket"), thresholds=thresholds, order_output=False,
-            observation=obs, detector_kind=detector_kind, detector_kw=detector_kw,
-        ).withColumn("bucket", bucket_expr(n_buckets))
-        # Per-conv stable ordering inside each bucket file set. Hash
-        # partition on (bucket, conv_id) -- NOT on bucket alone (one
-        # partition per bucket would serialize a 1.5 TB bucket's sort at
-        # 100 TB / 64 buckets) and NOT repartitionByRange (its boundary
-        # sampling would re-execute the kernel). Every conversation still
-        # lands whole in exactly one task, sorted by turn; the Hive-style
-        # partitionBy("bucket") below splits files per bucket regardless of
-        # task layout.
-        n_write = max(len(batch), spark.sparkContext.defaultParallelism)
-        out = out.repartition(n_write, "bucket", "conv_id").sortWithinPartitions(
-            "bucket", "conv_id", "turn_idx"
-        )
-        if iceberg_table is not None:
-            from .sinks import overwrite_buckets_iceberg
-
-            overwrite_buckets_iceberg(out, iceberg_table, batch)
-        else:
-            # clear the batch's (pending, uncommitted) partition dirs first:
-            # dynamic overwrite only replaces partitions it writes rows to,
-            # so a crashed attempt's rows would survive a re-run that now
-            # yields ZERO rows for that bucket (committed lineage over stale
-            # data). Deleting pending dirs is safe -- their lineage never
-            # committed, so resume recomputes them regardless.
-            _delete_bucket_dirs(spark, data_root, batch)
-            (
-                out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(data_root)
-            )
-        summary["input_scans"] += 1
-        got = obs.get
-        stamp = time.time()
-        counters = _per_bucket_counters(
-            spark, data_root if iceberg_table is None else iceberg_table, batch,
-            is_table=iceberg_table is not None,
-        )
-        for b in batch:
-            _commit_lineage(
-                output_root, b,
-                {
-                    "bucket": b,
-                    "counters": counters.get(
-                        b, {k: 0 for k in _COUNTER_COLS} | {"min_conv_id": None, "max_conv_id": None}
-                    ),
-                    "batch_counters": got,
-                    "committed_at": stamp,
-                },
-                spark,
-            )
-        summary["ran_buckets"] += len(batch)
-        summary["turns"] += got.get("turns", 0)
-        summary["errors"] += got.get("errors", 0)
-        n_done += 1
-
+    summary["turns"] = sum(c["turns"] for c in ran.values())
+    summary["errors"] = sum(c["errors"] for c in ran.values())
     return summary

@@ -1158,21 +1158,13 @@ def run_pipeline(spark, args, stages) -> dict:
 
 
 def run_pipeline_resumable(spark, args, stages) -> dict:
-    """Checkpoint-resumable batch curation -- the curation analog of
-    ``plans.lineage.run_resumable`` (north_rule: per-partition lineage +
-    counters enabling checkpoint-resumable restarts), sharing its lineage
-    commit/skip machinery.
-
-    The corpus is sharded into ``--buckets`` hash buckets; every pending
-    bucket is written in ONE ``partitionBy('bucket')`` pass by default
-    (one input scan per resume cycle; ``--bucket-batch`` bounds crash
-    recomputation at one extra scan per batch), and each bucket's lineage
-    record (rows, id range) is committed atomically AFTER its data write:
-    a restart lists the lineage dir and skips completed buckets --
-    exactly-once per bucket despite crashes between batches.
+    """Checkpoint-resumable batch curation: ``plans.lineage.run_bucketed``
+    over ``--buckets`` hash buckets (``--bucket-batch`` bounds crash
+    recomputation at one extra input scan per batch). Each bucket's lineage
+    counters are its row count and id range.
 
     Bucket-local processing must equal the one-shot pipeline, hence the
-    main() stage guard (RESUMABLE_STAGES). The one subtle case is exact
+    stage guard (RESUMABLE_STAGES). The one subtle case is exact
     dedup: the bucket key is the dedup FINGERPRINT (md5 of the normalized
     post-clean/pii text -- the text dedup itself sees) rather than the
     doc id, so every duplicate group lands whole in one bucket and
@@ -1187,8 +1179,6 @@ def run_pipeline_resumable(spark, args, stages) -> dict:
     ``fail_after_batches`` (Namespace attr, test hook): raise after N
     batches to simulate a crash; the next call resumes.
     """
-    import time as _time
-
     # the bucket-local == global invariant is owned HERE, not just by the
     # argparse layer: a programmatic caller passing a cross-bucket stage
     # (spandedup, neardup, ...) must get a loud error, never an output
@@ -1202,6 +1192,7 @@ def run_pipeline_resumable(spark, args, stages) -> dict:
             f"{','.join(RESUMABLE_STAGES)}"
         )
 
+    from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
 
     from action_pdf_accessibility_paddle_docker_spark.operators import dedup as D
@@ -1213,10 +1204,7 @@ def run_pipeline_resumable(spark, args, stages) -> dict:
         textstats as T,
     )
     from action_pdf_accessibility_paddle_docker_spark.plans.lineage import (
-        _commit_lineage,
-        _delete_bucket_dirs,
-        completed_buckets,
-        ensure_run_config,
+        run_bucketed,
     )
 
     df = spark.read.parquet(args.input)
@@ -1259,9 +1247,7 @@ def run_pipeline_resumable(spark, args, stages) -> dict:
 
     # pin everything a bucket index's MEANING depends on: the count, the
     # key kind (dedup fingerprints over the post-clean/pii text vs raw
-    # ids), and the stage/column set that shapes that key. A resume under
-    # different values would silently skip wrong buckets and leave stale
-    # partitions from the old keying in <output>/data.
+    # ids), and the stage/column set that shapes that key.
     # row-set-shaping parameters are pinned per stage actually present:
     # committed buckets keep the values they ran under, so a resume with
     # (say) a stricter --min-kept-lines would yield an inconsistent corpus
@@ -1283,37 +1269,8 @@ def run_pipeline_resumable(spark, args, stages) -> dict:
         shaping["rates"] = sorted(getattr(args, "rate", []) or [])
         shaping["default_rate"] = float(getattr(args, "default_rate", 1.0))
         shaping["stratum_col"] = args.stratum_col
-    ensure_run_config(
-        args.output,
-        {
-            "kind": "corpus",
-            "n_buckets": int(n_buckets),
-            "bucket_key": ("fingerprint" if "dedup" in stages else "id"),
-            "stages": [st for st in STAGES if st in set(stages)],
-            "id_col": args.id_col,
-            "text_col": args.text_col,
-            "input": args.input,
-            **shaping,
-        },
-        spark,
-    )
-    done = completed_buckets(args.output, spark)
-    pending = [b for b in range(n_buckets) if b not in done]
-    data_root = args.output.rstrip("/") + "/data"
-    step = int(getattr(args, "bucket_batch", None) or 0) or max(1, len(pending))
-    batches = [pending[i:i + step] for i in range(0, len(pending), step)]
-    fail_after = getattr(args, "fail_after_batches", None)
-    summary = {
-        "mode": "corpus-resumable", "stages": stages,
-        "resumed_buckets": len(done), "ran_buckets": 0, "input_scans": 0,
-    }
 
-    n_done = 0
-    for batch in batches:
-        if fail_after is not None and n_done >= fail_after:
-            raise RuntimeError(f"injected failure after {n_done} batches")
-        out = part.filter(F.col("bucket").isin([int(b) for b in batch])) \
-            if len(batch) < n_buckets else part
+    def transform(out):
         if "gate" in stages:
             out = T.apply_quality_gate(out, text_col=args.text_col)
         if "classify" in stages:
@@ -1343,68 +1300,40 @@ def run_pipeline_resumable(spark, args, stages) -> dict:
                 out, rates=rates, stratum_col=args.stratum_col,
                 id_col=args.id_col, default_rate=args.default_rate,
             )
-        # spread each bucket across tasks by id (one-partition-per-bucket
-        # would serialize a big bucket's write); partitionBy splits the
-        # files per bucket dir regardless of task layout
-        n_write = max(len(batch), spark.sparkContext.defaultParallelism)
-        # clear the batch's (pending, uncommitted) partition dirs first:
-        # dynamic overwrite only replaces partitions it writes rows to, so
-        # a crashed attempt's rows would survive a re-run that now yields
-        # zero rows for that bucket -- committed lineage over stale data
-        _delete_bucket_dirs(spark, data_root, [int(b) for b in batch])
-        (
-            out.repartition(n_write, "bucket", args.id_col)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(data_root)
-        )
-        summary["input_scans"] += 1
-        stamp = _time.time()
-        # counters derived from the just-written output: a
-        # partition-pruned, column-pruned read, never a chain re-execution.
-        # When every row of the batch was dropped upstream the data root
-        # may not exist at all (dynamic overwrite writes no dirs) -- the
-        # zero-row lineage records must still commit so resume skips.
-        # ONLY AnalysisException (missing path / no schema) means that; a
-        # transient storage error must propagate, or rows=0 records would
-        # be committed over intact data -- permanently wrong metadata.
-        from pyspark.errors import AnalysisException
+        return out
 
-        try:
-            written = spark.read.parquet(data_root)
-        except AnalysisException:  # path not yet created (zero-row batch)
-            written = None
-        got = {} if written is None else {
-            int(r["bucket"]): r.asDict()
-            for r in written
-            .where(F.col("bucket").isin([int(b) for b in batch]))
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.min(args.id_col).alias("min_id"),
-                F.max(args.id_col).alias("max_id"),
-            )
-            .collect()
-        }
-        for b in batch:
-            rec = got.get(int(b), {"rows": 0, "min_id": None, "max_id": None})
-            rec.pop("bucket", None)
-            _commit_lineage(
-                args.output, int(b),
-                {"bucket": int(b), "stamp": stamp,
-                 "rows": int(rec["rows"]),
-                 "min_id": rec["min_id"], "max_id": rec["max_id"]},
-                spark,
-            )
-        summary["ran_buckets"] += len(batch)
-        n_done += 1
-
+    summary, _ = run_bucketed(
+        spark, part, args.output,
+        {
+            "kind": "corpus",
+            "n_buckets": int(n_buckets),
+            "bucket_key": ("fingerprint" if "dedup" in stages else "id"),
+            "stages": [st for st in STAGES if st in set(stages)],
+            "id_col": args.id_col,
+            "text_col": args.text_col,
+            "input": args.input,
+            **shaping,
+        },
+        n_buckets=n_buckets,
+        bucket_batch=int(getattr(args, "bucket_batch", None) or 0) or None,
+        transform=transform,
+        order=(args.id_col,),
+        counters={
+            "rows": (F.count(F.lit(1)), 0),
+            "min_id": (F.min(args.id_col), None),
+            "max_id": (F.max(args.id_col), None),
+        },
+        fail_after_batches=getattr(args, "fail_after_batches", None),
+    )
     try:
-        summary["output"] = spark.read.parquet(data_root).count()
-    except Exception:  # noqa: BLE001 -- nothing survived any stage
-        summary["output"] = 0
-    return summary
+        written = spark.read.parquet(args.output.rstrip("/") + "/data")
+    except AnalysisException:  # no data root: nothing survived any stage
+        written = None
+    # any other failure (a damaged committed bucket) propagates: reporting
+    # it as an empty corpus would hide the damage
+    output = 0 if written is None else written.count()
+    return {"mode": "corpus-resumable", "stages": stages, **summary,
+            "output": output}
 
 
 def run_pipeline_streaming(spark, args, stages) -> dict:

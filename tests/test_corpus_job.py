@@ -6,6 +6,7 @@ import argparse
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from jobs.corpus_job import run_pipeline
 
@@ -363,10 +364,11 @@ def test_resumable_crash_resume_equals_one_shot(spark, tmp_path):
     which is bucket-local-safe because the bucket key is the dedup
     fingerprint (duplicate groups land whole in one bucket even when
     their doc_ids are far apart)."""
-    import pytest
+    import json
 
     from action_pdf_accessibility_paddle_docker_spark.plans.lineage import (
         completed_buckets,
+        read_lineage,
     )
     from jobs.corpus_job import run_pipeline_resumable
 
@@ -407,6 +409,22 @@ def test_resumable_crash_resume_equals_one_shot(spark, tmp_path):
     got = {tuple(sorted((k, v) for k, v in r.asDict().items() if k != "bucket"))
            for r in spark.read.parquet(str(root / "data")).collect()}
     assert got == want
+    # one record shape for every resumable run; counters sum to the data
+    recs = read_lineage(str(root), spark)
+    assert set(recs) == set(range(6))
+    assert all(set(r) == {"bucket", "counters", "committed_at"}
+               for r in recs.values())
+    assert sum(r["counters"]["rows"] for r in recs.values()) == len(got)
+    # the pinned run config is the exact dict earlier versions wrote, so
+    # their outputs still resume
+    with open(root / "_lineage" / "run_config.json") as f:
+        assert json.load(f) == {
+            "kind": "corpus", "n_buckets": 6, "bucket_key": "fingerprint",
+            "stages": ["clean", "pii", "gate", "dedup", "split", "sample"],
+            "id_col": "doc_id", "text_col": "text", "input": str(src),
+            "min_kept_lines": 2, "rates": ["web=0.8"], "default_rate": 1.0,
+            "stratum_col": "source",
+        }
     assert res["output"] == one["counters"]["output"]
     # a third run has nothing to do but reports the same output
     res2 = run_pipeline_resumable(
@@ -977,44 +995,90 @@ def test_empty_input_runs_every_stage_clean(spark, tmp_path):
     assert res["counters"]["output"] == 0
 
 
-def test_resumable_clears_stale_pending_partitions(spark, tmp_path):
+@pytest.mark.parametrize("caller", ["curation", "extraction"])
+def test_resumable_clears_stale_pending_partitions(spark, tmp_path, caller):
     """A crashed attempt's partition dir must not survive a re-run whose
     recomputation yields ZERO rows for that bucket: dynamic overwrite only
     replaces partitions it writes rows to, so pending bucket dirs are
-    cleared before the batch write."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    cleared before the batch write. Every bucket, empty ones included,
+    still commits its lineage record. Drilled through both resumable
+    callers of the one bucket runner."""
+    from action_pdf_accessibility_paddle_docker_spark.plans.lineage import (
+        read_lineage,
+        run_resumable,
+    )
+    from action_pdf_accessibility_paddle_docker_spark.sources.transcripts import (
+        write_transcripts_parquet,
+    )
     from jobs.corpus_job import run_pipeline_resumable
 
     src = tmp_path / "in_st"
-    src.mkdir()
-    # every doc fails the gate -> the whole run writes zero rows
-    _write_docs(src / "p.parquet", [
-        dict(doc_id=i, text="tiny.\nnope", source="web") for i in range(6)
-    ])
     out = tmp_path / "out_st"
-    data_root = out / "data"
-    # stale debris from a "crashed attempt": rows in a pending bucket dir
-    stale = data_root / "bucket=0"
-    stale.mkdir(parents=True)
-    pq.write_table(
-        pa.Table.from_pylist([dict(doc_id=999, text="stale row",
-                                   source="web", bucket=0)]),
-        str(stale / "junk.parquet"),
-    )
-    run_pipeline_resumable(
-        spark,
-        _ns(input=str(src), output=str(out), buckets=2, bucket_batch=None,
-            fail_after_batches=None),
-        ["gate"],
-    )
-    import os
+    if caller == "curation":
+        # every doc fails the gate -> the whole run writes zero rows
+        src.mkdir()
+        _write_docs(src / "p.parquet", [
+            dict(doc_id=i, text="tiny.\nnope", source="web") for i in range(6)
+        ])
+        n_buckets, n_rows, rows_key = 2, 0, "rows"
+        debris = dict(doc_id=999, text="stale row", source="web")
 
-    dirs = [d for d in os.listdir(data_root)] if data_root.exists() else []
-    assert not any(d.startswith("bucket=0") and
-                   any(f.endswith(".parquet") for f in os.listdir(data_root / d))
-                   for d in dirs), "stale partition survived the rewrite"
+        def run():
+            run_pipeline_resumable(
+                spark,
+                _ns(input=str(src), output=str(out), buckets=n_buckets,
+                    bucket_batch=None, fail_after_batches=None),
+                ["gate"],
+            )
+    else:
+        # more buckets than conversations -> some buckets come out empty
+        n_rows = write_transcripts_parquet(str(src), n_convs=3,
+                                           median_turns=2, seed=5)
+        n_buckets, rows_key = 8, "turns"
+        debris = dict(conv_id="stale", turn_idx=0, extracted_text="stale row")
+
+        def run():
+            run_resumable(spark, str(src), str(out), n_buckets=n_buckets)
+
+    # stale debris from a "crashed attempt": rows in every pending bucket dir
+    for b in range(n_buckets):
+        stale = out / "data" / f"bucket={b}"
+        stale.mkdir(parents=True)
+        pq.write_table(pa.Table.from_pylist([debris]),
+                       str(stale / "junk.parquet"))
+    run()
+    assert not list((out / "data").rglob("junk.parquet")), \
+        "stale partition survived the rewrite"
+    recs = read_lineage(str(out), spark)
+    assert set(recs) == set(range(n_buckets))
+    counts = [recs[b]["counters"][rows_key] for b in range(n_buckets)]
+    assert sum(counts) == n_rows and 0 in counts
+
+
+def test_resumable_output_count_surfaces_damaged_bucket(spark, tmp_path):
+    """The resumable summary's output count reads 0 only when no data root
+    exists; a damaged committed bucket must raise, not report an empty
+    corpus."""
+    from py4j.protocol import Py4JJavaError
+
+    from jobs.corpus_job import run_pipeline_resumable
+
+    src = tmp_path / "in_dmg"
+    src.mkdir()
+    _write_docs(src / "p.parquet", [
+        dict(doc_id=i, text=GOOD + f"\nunique tail {i} ends here.",
+             source="web")
+        for i in range(6)
+    ])
+    out = tmp_path / "out_dmg"
+    kw = dict(input=str(src), output=str(out), buckets=2)
+    assert run_pipeline_resumable(spark, _ns(**kw), ["gate"])["output"] == 6
+    committed = sorted((out / "data").glob("bucket=*"))[0]
+    (committed / "part-99999-junk.snappy.parquet").write_bytes(
+        b"not a parquet file"
+    )
+    with pytest.raises(Py4JJavaError, match="part-99999-junk"):
+        run_pipeline_resumable(spark, _ns(**kw), ["gate"])
 
 
 def test_resumable_rejects_cross_bucket_stage_in_library(spark, tmp_path):

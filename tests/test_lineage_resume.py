@@ -82,18 +82,32 @@ def test_default_run_scans_input_once(spark, input_path, tmp_path):
 def test_lineage_counters_are_per_bucket(spark, input_path, tmp_path):
     """Each bucket's lineage record carries ITS OWN counters (derived from a
     grouped pass over the written output), not batch-level copies; their sum
-    reconciles with the observe totals."""
+    reconciles with the summary and the data root. The pinned run config is
+    the exact dict earlier versions wrote, so their outputs still resume."""
+    import json
+
     path, n = input_path
     out_root = str(tmp_path / "out4")
-    run_resumable(spark, path, out_root, n_buckets=8)
+    summary = run_resumable(spark, path, out_root, n_buckets=8)
+    with open(f"{out_root}/_lineage/run_config.json") as f:
+        assert json.load(f) == {
+            "kind": "extraction", "n_buckets": 8, "bucket_key": "conv_id",
+            "iceberg_table": None, "input": path, "thresholds": None,
+            "detector": "stub:[]",
+        }
     recs = read_lineage(out_root)
     assert set(recs) == set(range(8))
+    assert all(set(r) == {"bucket", "counters", "committed_at"}
+               for r in recs.values())
+    assert summary["turns"] == sum(r["counters"]["turns"] for r in recs.values())
+    assert summary["errors"] == sum(r["counters"]["errors"] for r in recs.values())
     per_bucket_turns = [recs[b]["counters"]["turns"] for b in range(8)]
     assert sum(per_bucket_turns) == n
     # 20 convs over 8 hash buckets: bucket sizes must actually differ
     # (batch-level copies would all be equal)
     assert len(set(per_bucket_turns)) > 1
     got = spark.read.parquet(out_root + "/data")
+    assert sum(per_bucket_turns) == got.count()
     for b in range(8):
         assert recs[b]["counters"]["turns"] == got.where(f"bucket = {b}").count()
 

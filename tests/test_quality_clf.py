@@ -369,3 +369,31 @@ def test_carry_columns_ride_the_single_scan(spark):
         if "Scan parquet" in ln and "documents" in ln
     ]
     assert len(doc_scans) == 1, final
+
+
+def test_two_weightings_join_like_standalone_runs(spark):
+    """Two score_documents outputs over one corpus under DIFFERENT weights
+    share the cached expression fragments (weights are not part of the
+    cache key), so their columns carry the same expression ids. Joined on
+    doc_id, each side must still equal its own standalone run."""
+    labeled = _toy_labeled(spark)
+    docs = labeled.drop("label")
+    w1, b1 = C.train_quality_classifier(labeled, vocab_size=512, max_iter=100)
+    w2 = w1.select("term", (-F.col("weight")).alias("weight"))
+    cols = ("n_terms", "clf_score", "clf_keep")
+
+    def rows(df, side=""):
+        return {r["doc_id"]: tuple(r[side + c] for c in cols)
+                for r in df.collect()}
+
+    s1 = C.score_documents(docs, w1, bias=b1)
+    s2 = C.score_documents(docs, w2, bias=b1)
+    want1, want2 = rows(s1), rows(s2)
+    assert want1 != want2
+    joined = s1.alias("a").join(s2.alias("b"), "doc_id").select(
+        "doc_id",
+        *(F.col(f"{side}.{c}").alias(f"{side}_{c}")
+          for side in ("a", "b") for c in cols),
+    )
+    assert rows(joined, "a_") == want1
+    assert rows(joined, "b_") == want2
