@@ -17,10 +17,11 @@ an exact DuckDB oracle in plans/queries.py.
 
 from __future__ import annotations
 
-from functools import lru_cache
 from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..memo import memo
 
 NUM_MINHASHES = 16
 LSH_BANDS = 4  # 4 rows per band
@@ -78,21 +79,15 @@ def _widen(df: DataFrame, key: str | None = None) -> DataFrame:
     part = (F.col(key),) if key is not None else ()
     try:
         want = df.sparkSession.sparkContext.defaultParallelism
-        # the .rdd partition-count probe costs ~35 ms of driver time per
+        # the .rdd partition-count probe costs ~20 ms of driver time per
         # call (plan -> RDD conversion); memoize it per semantically-equal
-        # plan (round 8). A (vanishingly unlikely) 32-bit hash collision
-        # could only flip the widen DECISION, never a value -- repartition
-        # is value-neutral; same staleness caveat as the scan memo.
-        ck = (df.sparkSession, df.semanticHash())
-        n_parts = _NPARTS_CACHE.get(ck)
-        if n_parts is None:
-            n_parts = _NPARTS_CACHE[ck] = df.rdd.getNumPartitions()
+        # plan. A (vanishingly unlikely) 32-bit hash collision could only
+        # flip the widen DECISION, never a value (repartition is neutral).
+        n_parts = memo(df.sparkSession, (_widen, df.semanticHash()),
+                       lambda: df.rdd.getNumPartitions())
     except Exception:  # Spark Connect: no sparkContext / DataFrame.rdd
         return df.repartition(16, *part)
     return df.repartition(want, *part) if n_parts < want else df
-
-
-_NPARTS_CACHE: dict = {}
 
 
 def range_widen(df: DataFrame, key: str) -> DataFrame:
@@ -988,17 +983,17 @@ def minhash_signatures(
         )
     elif hash_family not in ("md5", "xxhash64"):
         raise ValueError(f"unknown hash_family: {hash_family!r}")
-    mins, arr = _minhash_agg_exprs(num_hashes, hash_family)
+    mins, arr = memo(sh.sparkSession, (_minhash_agg_exprs, num_hashes, hash_family),
+                     lambda: _minhash_agg_exprs(num_hashes, hash_family))
     sig = sh.groupBy("doc_id").agg(*mins)
     return sig.select("doc_id", arr.alias("sig"))
 
 
-@lru_cache(maxsize=None)
 def _minhash_agg_exprs(num_hashes: int, hash_family: str):
     """The per-family min-aggregate Columns and the signature-array Column
-    (name-based, input-independent) -- compiled once per process instead of
-    per call (round 8: plan CONSTRUCTION is serial driver time; 16 mix
-    expressions x several py4j round-trips each, every bench round)."""
+    (name-based, input-independent) -- compiled once per session instead of
+    per call (plan CONSTRUCTION is serial driver time; 16 mix expressions x
+    several py4j round-trips each)."""
     p = MINHASH_MIX_PRIME
     if hash_family == "md5mix":
         mix = minhash_mix_constants(num_hashes)
@@ -1112,9 +1107,9 @@ def minhash_band_buckets(
     elif bands is None:
         bands = LSH_BANDS
     sig = minhash_signatures(df, num_hashes, id_col, text_col, hash_family)
-    return sig.select(
-        "doc_id", F.explode(_band_struct_array(num_hashes, bands)).alias("bb")
-    ).select(
+    band_arr = memo(sig.sparkSession, (_band_struct_array, num_hashes, bands),
+                    lambda: _band_struct_array(num_hashes, bands))
+    return sig.select("doc_id", F.explode(band_arr).alias("bb")).select(
         "doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"),
         # provenance stamps: bucket values are md5 hex in EVERY family and
         # band slices under one banding never match another's, so either
@@ -1126,10 +1121,9 @@ def minhash_band_buckets(
     )
 
 
-@lru_cache(maxsize=None)
 def _band_struct_array(num_hashes: int, bands: int):
     """The (band, bucket) struct array over the ``sig`` column -- compiled
-    once per (num_hashes, bands) pair per process (same rationale as
+    once per (num_hashes, bands) pair per session (same rationale as
     ``_minhash_agg_exprs``)."""
     rows_per_band = num_hashes // bands
     band_cols = []
@@ -1660,15 +1654,15 @@ def simhash(df: DataFrame, bits: int = SIMHASH_BITS, id_col: str = "doc_id", tex
         "doc_id",
         F.explode(F.split(normalized(F.col("text")), " ")).alias("tok"),
     ).where(F.length("tok") > 0)
-    votes, sim = _simhash_agg_exprs(bits)
+    votes, sim = memo(toks.sparkSession, (_simhash_agg_exprs, bits),
+                      lambda: _simhash_agg_exprs(bits))
     agg = toks.groupBy("doc_id").agg(*votes)
     return agg.select("doc_id", sim.alias("simhash"))
 
 
-@lru_cache(maxsize=None)
 def _simhash_agg_exprs(bits: int):
     """The per-bit vote aggregates and the recombine Column (name-based,
-    input-independent) -- compiled once per process (the
+    input-independent) -- compiled once per session (the
     ``_minhash_agg_exprs`` rationale)."""
     h = _hash_hex_to_long(F.md5(F.col("tok")))
     votes = tuple(

@@ -17,10 +17,10 @@ oracle in ``plans/queries.py`` (``q_line_filter``).
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..memo import memo
 
 # mirrored literally in the oracle SQL — keep in sync
 TERMINAL_CHARS = (".", "!", "?", '"')
@@ -74,18 +74,17 @@ def line_filter_stats(
     projection-only."""
     from .dedup import _widen
 
-    return _widen(df).select(
-        *_line_filter_exprs(id_col, text_col, min_words, min_kept_lines)
-    )
+    key = (id_col, text_col, min_words, min_kept_lines)
+    return _widen(df).select(*memo(df.sparkSession, (_line_filter_exprs, *key),
+                                   lambda: _line_filter_exprs(*key)))
 
 
-@lru_cache(maxsize=None)
 def _line_filter_exprs(
     id_col: str, text_col: str, min_words: int, min_kept_lines: int
 ) -> tuple:
     """``line_filter_stats``' output Columns -- pure functions of the column
-    names and thresholds, compiled once per process (round 8 driver-side
-    build reduction)."""
+    names and thresholds, compiled once per session (driver-side build
+    reduction)."""
     t = F.col(text_col)
     kept = clean_lines(t, min_words)
     return (

@@ -16,10 +16,10 @@ on the ORIGINAL text, so the two are independent and deterministic.
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..memo import memo
 
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 IPV4_RE = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
@@ -132,13 +132,14 @@ def pii_stats(
     default keeps the hot projection strictly regex-only)."""
     from .dedup import _widen
 
-    return _widen(df).select(*_pii_stats_exprs(id_col, text_col, validate_cards))
+    key = (id_col, text_col, validate_cards)
+    return _widen(df).select(*memo(df.sparkSession, (_pii_stats_exprs, *key),
+                                   lambda: _pii_stats_exprs(*key)))
 
 
-@lru_cache(maxsize=None)
 def _pii_stats_exprs(id_col: str, text_col: str, validate_cards: bool) -> tuple:
     """``pii_stats``' output Columns -- pure functions of the column names,
-    compiled once per process (round 8 driver-side build reduction)."""
+    compiled once per session (driver-side build reduction)."""
     t = F.col(text_col)
     valid = (
         [F.size(

@@ -39,10 +39,10 @@ No reference analog (engine extension beyond
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..memo import memo
 
 #: ``save_classifier`` stores the intercept inside the weights parquet as a
 #: row whose term is this sentinel. Real terms are non-empty whitespace-free
@@ -94,7 +94,7 @@ def score_documents(
     bigrams: bool = True,
     round_to: int = 6,
     carry: tuple[str, ...] = (),
-    terms_col: Column | str | tuple[str, ...] | None = None,
+    terms_col: str | tuple[str, ...] | None = None,
     gate_col: str | None = None,
 ) -> DataFrame:
     """Score every document under a trained linear model: one row per input
@@ -109,14 +109,11 @@ def score_documents(
     ``WEIGHT_FP_SCALE``). ``clf_score`` is rounded before the threshold
     compare so both engines gate on the same stored value.
 
-    ``terms_col`` (a column name, a TUPLE of array-column names to concat,
-    or a Column over ``df``) supplies a PRECOMPUTED term array instead of
-    re-deriving it from ``text_col`` -- e.g. the quality gate already
-    materializes the filtered word and bigram arrays
-    (``keep_cols=("_wt", "_bg")``), so the composed gate+classifier pass
-    normalizes and splits each document exactly once. Prefer the name forms:
-    they make the whole expression build cacheable (``_score_exprs``); an
-    arbitrary Column is accepted but compiles fresh per call.
+    ``terms_col`` (a column name, or a TUPLE of array-column names to
+    concat) supplies a PRECOMPUTED term array instead of re-deriving it from
+    ``text_col`` -- e.g. the quality gate already materializes the filtered
+    word and bigram arrays (``keep_cols=("_wt", "_bg")``), so the composed
+    gate+classifier pass normalizes and splits each document exactly once.
 
     ``gate_col`` names a BOOLEAN carry column (must appear in ``carry``):
     only rows where it is true are exploded and scored -- the DCLM ordering,
@@ -139,17 +136,10 @@ def score_documents(
             f"gate_col {gate_col!r} must be one of the carry columns "
             f"{carry!r} so the verdict can NULL gated-out scores"
         )
-    if isinstance(terms_col, Column):
-        # caller-supplied Column: not name-keyable, compile fresh per call
-        row_cols, agg_expr, out_cols = _score_exprs.__wrapped__(
-            id_col, tuple(carry), _TermsExpr(terms_col), gate_col,
-            text_col, bigrams, float(bias), float(threshold), round_to,
-        )
-    else:
-        row_cols, agg_expr, out_cols = _score_exprs(
-            id_col, tuple(carry), terms_col, gate_col,
-            text_col, bigrams, float(bias), float(threshold), round_to,
-        )
+    key = (id_col, tuple(carry), terms_col, gate_col,
+           text_col, bigrams, float(bias), float(threshold), round_to)
+    row_cols, agg_expr, out_cols = memo(df.sparkSession, (_score_exprs, *key),
+                                        lambda: _score_exprs(*key))
     agg = (
         df.select(*row_cols)
         .join(F.broadcast(weights), "term", "left")
@@ -159,18 +149,6 @@ def score_documents(
     return agg.select(*out_cols)
 
 
-class _TermsExpr:
-    """Opaque carrier for a caller-supplied terms Column so the UNCACHED
-    path can reuse ``_score_exprs``' body (via ``__wrapped__``) without the
-    Column ever touching the lru_cache key."""
-
-    __slots__ = ("col",)
-
-    def __init__(self, col: Column):
-        self.col = col
-
-
-@lru_cache(maxsize=None)
 def _score_exprs(
     id_col: str,
     carry: tuple,
@@ -184,15 +162,13 @@ def _score_exprs(
 ):
     """``score_documents``' Column fragments -- (explode-select list,
     aggregate expression, output-select list) -- pure functions of names
-    and scalars, compiled once per process (round-8 residual 5: ~0.15 s of
-    py4j round-trips per call on the q_quality_gate path). ``terms_key`` is
-    None (derive from ``text_col``), a column name, a tuple of array-column
-    names to concat, or a ``_TermsExpr`` (uncached path only). Returned
-    containers are shared -- callers must treat them as read-only."""
+    and scalars, compiled once per session (~0.15 s of py4j round-trips per
+    call on the q_quality_gate path). ``terms_key`` is None (derive from
+    ``text_col``), a column name, or a tuple of array-column names to
+    concat. Returned containers are shared -- callers must treat them as
+    read-only."""
     if terms_key is None:
         t = terms_array(F.col(text_col), bigrams=bigrams)
-    elif isinstance(terms_key, _TermsExpr):
-        t = terms_key.col
     elif isinstance(terms_key, tuple):
         t = F.concat(*[F.col(c) for c in terms_key])
     else:

@@ -8,11 +8,12 @@ the driver harness can verify them value-for-value.
 
 from __future__ import annotations
 
-from functools import lru_cache
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..memo import memo
 
 # shared constants (mirrored literally in the oracle SQL)
 EN_STOPWORDS = ("the", "a", "of", "and", "to", "in")
@@ -253,7 +254,9 @@ def _gate_frame(df: DataFrame, text_col: str, p: dict):
     rows unchanged."""
     from .dedup import _widen
 
-    staged, reasons, cols = _gate_exprs(text_col, tuple(sorted(p.items())))
+    p_items = tuple(sorted(p.items()))
+    staged, reasons, cols = memo(df.sparkSession, (_gate_exprs, text_col, p_items),
+                                 lambda: _gate_exprs(text_col, p_items))
     # hash-widen by doc id when present: the composed gate+classifier pass
     # (score_documents) aggregates per doc downstream, and
     # HashPartitioning(doc_id) lets that groupBy skip its own exchange of
@@ -267,13 +270,12 @@ def _gate_frame(df: DataFrame, text_col: str, p: dict):
     return base, reasons, cols
 
 
-@lru_cache(maxsize=None)
 def _gate_exprs(text_col: str, p_items: tuple):
     """The gate's staged array Columns, reject-reasons Column, and signal
     Columns -- pure functions of (text_col, thresholds), compiled once per
-    process (round 8: this was the single heaviest expression build in the
-    repo, ~0.3 s of py4j round-trips per call). Returned containers are
-    shared -- callers must treat them as read-only."""
+    session (the heaviest expression build in the repo, ~0.3 s of py4j
+    round-trips per call). Returned containers are shared -- callers must
+    treat them as read-only."""
     from .dedup import normalized
 
     t = F.col(text_col)
@@ -432,6 +434,7 @@ def document_stats(
 
     extra = extra or {}
     t = F.col(text_col)
+    spark = df.sparkSession
     # widen the raw rows FIRST (no-op when the scan already has enough
     # splits): a single-row-group parquet file otherwise runs the whole
     # tokenize/stats projection in one task
@@ -441,22 +444,23 @@ def document_stats(
             *[c.alias(f"_x_{k}") for k, c in extra.items()],
         )
     ).select(
-        "doc_id", "_t", _DOC_TOKS_EXPR(), *[f"_x_{k}" for k in extra],
+        "doc_id", "_t", memo(spark, (_DOC_TOKS_EXPR,), _DOC_TOKS_EXPR),
+        *[f"_x_{k}" for k in extra],
     )
-    return base.select(*_doc_stats_exprs(tuple(extra)))
+    names = tuple(extra)
+    return base.select(*memo(spark, (_doc_stats_exprs, names),
+                             lambda: _doc_stats_exprs(names)))
 
 
-@lru_cache(maxsize=None)
 def _DOC_TOKS_EXPR():
     return tokens(F.col("_t")).alias("_toks")
 
 
-@lru_cache(maxsize=None)
 def _doc_stats_exprs(extra_names: tuple) -> tuple:
     """``document_stats``' output Columns over the staged ``_t``/``_toks``
-    names -- compiled once per process (round 8: the stats expressions cost
-    hundreds of driver-side py4j round-trips per call and are pure
-    functions of the staging names)."""
+    names -- compiled once per session (the stats expressions cost hundreds
+    of driver-side py4j round-trips per call and are pure functions of the
+    staging names)."""
     toks = F.col("_toks")
     tl = F.col("_t")
     en, es, lang = _lang_signals(toks)

@@ -49,10 +49,11 @@ its reducer as one partial per mapper, the same posture as
 
 from __future__ import annotations
 
-from functools import lru_cache
 from typing import Iterable, Union
 
 from pyspark.sql import Column, DataFrame, functions as F
+
+from ..memo import memo
 
 # mirrored literally by the DuckDB oracle (plans/queries.py) — keep in sync
 TRACKING_PARAMS = (
@@ -257,15 +258,13 @@ def with_url_columns(
     because the staged aliases are non-cheap and multi-referenced. Same
     values, same single scan, linear-size plan.
 
-    Round 8: the staged Columns are compiled ONCE per process
-    (``_staged_url_exprs`` below) -- they reference only the fixed staging
-    names, and Columns are immutable expression handles, so rebuilding the
-    ~1000-node PSL CASE on every call was pure driver-side py4j overhead
-    (guide section 1.2: per-task work includes the driver's plan
-    construction, which at many-query scale is serial time). The input
-    expression is staged as ``_u_raw`` so every downstream stage is
-    name-based (it is referenced once, so CollapseProject inlines it --
-    no extra projection in the optimized plan)."""
+    The staged Columns reference only the fixed staging names, so they are
+    built ONCE per session (``_staged_url_exprs``): rebuilding the
+    ~1000-node PSL CASE per call is pure driver-side py4j overhead, serial
+    time at many-query scale. The input expression is staged as ``_u_raw``
+    so every downstream stage is name-based (it is referenced once, so
+    CollapseProject inlines it -- no extra projection in the optimized
+    plan)."""
     staging = ("_u_raw", "_u_s", "_u_h", "_u_hs")
     clash = [c for c in staging if c in df.columns]
     if clash:
@@ -276,7 +275,7 @@ def with_url_columns(
             "which collide with the internal staging names -- rename them"
         )
     u = F.col(url) if isinstance(url, str) else url
-    ex = _staged_url_exprs()
+    ex = memo(df.sparkSession, (_staged_url_exprs,), _staged_url_exprs)
     staged = ["_u_raw", "_u_s"]
     out = df.withColumn("_u_raw", u).withColumn("_u_s", ex["strip"])
     if host is not None or url_domain is not None:
@@ -293,11 +292,10 @@ def with_url_columns(
     return out.drop(*staged)
 
 
-@lru_cache(maxsize=None)
 def _staged_url_exprs() -> dict:
     """The five staged URL Columns over the fixed staging names -- compiled
-    once per process (see ``with_url_columns``). Pure expression handles:
-    no data, no session state."""
+    once per session (see ``with_url_columns``). Pure expression handles:
+    no data."""
     return {
         "strip": stripped_url(F.col("_u_raw")),
         "host": url_host_from(F.col("_u_s")),

@@ -19,6 +19,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..memo import memo
 from ..operators import dedup as D
 from ..operators import similarity as S
 from ..operators import textstats as T
@@ -44,23 +45,18 @@ def _fixture_sql(name: str, columns: str, order_by: str) -> str:
     )
 
 
-# Lazy-scan memo per (session, path): ``spark.read.parquet`` re-lists the
-# directory and re-reads footers for schema inference on EVERY call (~85 ms
-# against local disk; worse on object stores), and a bench/driver session
-# builds each query several times. The cached object is a LAZY scan node --
-# no rows, no results; every execution still reads the parquet files (the
-# same reuse semantics as a registered temp view / session catalog table,
-# incl. the same staleness caveat: overwrite the files mid-session and you
-# must drop the entry, exactly like Spark's own REFRESH TABLE).
-_SCAN_CACHE: dict = {}
-
-
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    key = (spark, f"{sf_dir}/{table}.parquet")
-    df = _SCAN_CACHE.get(key)
-    if df is None:
-        df = _SCAN_CACHE[key] = spark.read.parquet(key[1])
-    return df
+    """The lazy scan of ``<sf_dir>/<table>.parquet``, memoized per session:
+    ``spark.read.parquet`` lists the directory and reads footers on every
+    call (65-77 ms on local disk), and a session builds each query several
+    times. The memo holds a lazy scan node, not rows; every execution still
+    reads the files. Staleness contract: a new session reads fresh, and a
+    Spark overwrite of the table within a session makes the next execution
+    of the memoized scan fail loudly (``FAILED_READ_FILE.FILE_NOT_EXIST``:
+    it lists the replaced part files) rather than return old rows -- start
+    a new session after an overwrite."""
+    path = f"{sf_dir}/{table}.parquet"
+    return memo(spark, (_read, path), lambda: spark.read.parquet(path))
 
 
 def register(name: str, sql: Optional[str]):
@@ -626,10 +622,6 @@ _ES_LIST = "['el','la','de','los','y','en']"
 # unsorted params, fragment, two-level public suffix, unparseable rows).
 
 
-from functools import lru_cache as _lru_cache  # noqa: E402
-
-
-@_lru_cache(maxsize=None)
 def _synth_url_col() -> "F.Column":
     d = F.col("doc_id")
 
@@ -780,7 +772,8 @@ def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (dedup.range_widen -- measured 1.03 -> 0.36 s at sf0.1)
     staged = U.with_url_columns(
         D.range_widen(_read(spark, sf_dir, "documents"), "doc_id"),
-        _synth_url_col(), norm_url="_nu", url_domain="_ud",
+        memo(spark, (_synth_url_col,), _synth_url_col),
+        norm_url="_nu", url_domain="_ud",
     )
     return T.document_stats(
         staged,
@@ -829,16 +822,13 @@ from ..operators.quality_clf import WEIGHT_FP_SCALE as _WFP_INT  # noqa: E402
 
 _WFP = repr(float(_WFP_INT))
 
-_QCLF_STATE: Optional[list] = None
-
 
 def _qclf_model(spark: SparkSession):
     """The committed quality-classifier fixture (scripts/make_qclf_fixture.py)
-    as ``(weights_df, bias)``. Read once per process with pyarrow -- a
+    as ``(weights_df, bias)``. Read once per session with pyarrow -- a
     driver-local vocab-bounded file, no Spark job -- then rebuilt as a tiny
     LocalRelation per call (the broadcast side of the scoring join)."""
-    global _QCLF_STATE
-    if _QCLF_STATE is None:
+    def read():
         import pyarrow.parquet as pq
 
         from ..operators.quality_clf import BIAS_SENTINEL
@@ -848,8 +838,9 @@ def _qclf_model(spark: SparkSession):
             zip(tbl.column("term").to_pylist(), tbl.column("weight").to_pylist())
         )
         bias = next(w for t, w in rows if t == BIAS_SENTINEL)
-        _QCLF_STATE = [[(t, w) for t, w in rows if t != BIAS_SENTINEL], bias]
-    w, b = _QCLF_STATE
+        return [(t, w) for t, w in rows if t != BIAS_SENTINEL], bias
+
+    w, b = memo(spark, (_qclf_model,), read)
     return spark.createDataFrame(w, "term string, weight double"), b
 
 
@@ -2201,12 +2192,11 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # group scan across the cluster AND pre-pays the final orderBy's
     # partitioning, so the regex stack runs once, not twice (range_widen)
     doc = D.range_widen(_read(spark, sf_dir, "documents"), "doc_id").select(
-        "doc_id", _pii_injected_col().alias("text")
+        "doc_id", memo(spark, (_pii_injected_col,), _pii_injected_col).alias("text")
     )
     return P.pii_stats(doc, validate_cards=True).orderBy("doc_id")
 
 
-@_lru_cache(maxsize=None)
 def _pii_injected_col() -> "F.Column":
     d = F.col("doc_id")
     return F.when(
@@ -2320,12 +2310,12 @@ def q_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # RANGE-widen: same rationale as q_pii_redact (projection runs once;
     # final orderBy needs no exchange)
     doc = D.range_widen(_read(spark, sf_dir, "documents"), "doc_id").select(
-        "doc_id", _line_filter_injected_col().alias("text")
+        "doc_id",
+        memo(spark, (_line_filter_injected_col,), _line_filter_injected_col).alias("text"),
     )
     return L.line_filter_stats(doc).orderBy("doc_id")
 
 
-@_lru_cache(maxsize=None)
 def _line_filter_injected_col() -> "F.Column":
     t = F.split(D.normalized(F.col("text")), " ")
     d = F.col("doc_id")

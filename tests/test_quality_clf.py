@@ -272,7 +272,7 @@ def test_terms_col_reuses_gate_arrays(spark):
     via_arrays = {
         r["doc_id"]: (r["n_terms"], r["clf_score"], r["clf_keep"])
         for r in C.score_documents(
-            g, weights, bias=bias, terms_col=F.concat("_wt", "_bg")
+            g, weights, bias=bias, terms_col=("_wt", "_bg")
         ).collect()
     }
     via_text = {
@@ -282,16 +282,23 @@ def test_terms_col_reuses_gate_arrays(spark):
     assert via_arrays == via_text
 
 
-def test_terms_col_tuple_form_cached(spark):
-    """The name-tuple terms_col (the cache-keyable form q_quality_gate now
-    uses) scores identically to the explicit concat Column, the repeat call
-    is a cache hit, and a different carry tuple misses (no key collision)."""
+def test_terms_col_tuple_form_cached(spark, monkeypatch):
+    """The name-tuple terms_col (the form q_quality_gate uses) builds its
+    fragments once per session: the first call builds once, the repeat
+    call is served by the session memo, and a different carry tuple builds
+    again (no key collision)."""
     from action_pdf_accessibility_paddle_docker_spark.operators import (
         textstats as T,
     )
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    weights, bias = C.load_classifier(spark, FIXTURE)
+    builds = []
+    build = C._score_exprs
+    monkeypatch.setattr(
+        C, "_score_exprs", lambda *key: builds.append(key) or build(*key)
+    )
+    fresh = spark.newSession()  # a new session starts with an empty memo
+    docs = fresh.read.parquet(f"{SF_DIR}/documents.parquet")
+    weights, bias = C.load_classifier(fresh, FIXTURE)
     g = T.quality_gate(docs, include_signals=True, keep_cols=("_wt", "_bg"))
 
     def rows(df):
@@ -300,27 +307,24 @@ def test_terms_col_tuple_form_cached(spark):
             for r in df.collect()
         }
 
-    via_col = rows(
-        C.score_documents(g, weights, bias=bias, terms_col=F.concat("_wt", "_bg"))
-    )
-    C._score_exprs.cache_clear()
+    via_text = rows(C.score_documents(docs, weights, bias=bias))
+    builds.clear()
     via_tuple = rows(
         C.score_documents(g, weights, bias=bias, terms_col=("_wt", "_bg"))
     )
-    assert via_tuple == via_col
-    info = C._score_exprs.cache_info()
-    assert (info.hits, info.misses) == (0, 1)
-    # identical call -> pure cache hit; shared fragments still score right
+    assert via_tuple == via_text
+    assert len(builds) == 1
+    # identical call -> served by the memo; shared fragments still score right
     assert rows(
         C.score_documents(g, weights, bias=bias, terms_col=("_wt", "_bg"))
-    ) == via_col
-    assert C._score_exprs.cache_info().hits == 1
-    # a different key (extra carry) must not collide with the cached entry
+    ) == via_text
+    assert len(builds) == 1
+    # a different key (extra carry) must not collide with the memoized entry
     with_carry = C.score_documents(
         g, weights, bias=bias, terms_col=("_wt", "_bg"), carry=("n_tokens",)
     )
     assert "n_tokens" in with_carry.columns
-    assert C._score_exprs.cache_info().misses == 2
+    assert len(builds) == 2
 
 
 def test_plan_jvm_only_and_broadcast(spark):
